@@ -1,9 +1,18 @@
 """System under test for the live workloads: one daemon process.
 
-Runs ``streaming.daemon.run_daemon`` exactly as the CLI would, on the
-socket, port and work dir the runner hands it, and stops when its stdin
-closes.  With ``--trace PATH`` it also records, from outside the
-program's code:
+Runs ``streaming.daemon.run_daemon`` as the CLI would, on the socket,
+port and work dir the runner hands it, and stops when its stdin closes.
+
+The spool flushes on a 0.5 s timer that starts when the daemon's event
+loop first runs freely, while Spark fires its 1 s trigger on whole
+wall-clock seconds.  Left alone, how the two line up is a random draw
+per daemon start that moves every delivery's wait by up to 0.5 s, the
+same for the whole run.  So the host lets the event loop run only once
+the wall clock is ``FLUSH_PHASE`` past a half second: every run then
+sees the mean alignment, flushes a quarter second away from each
+trigger.
+
+With ``--trace PATH`` it also records, from outside the program's code:
 
 - ``session.start``: the ``get_spark`` call;
 - one ``push`` span per ``ListenerRegistry.push_batch`` call (a wrapper
@@ -29,6 +38,30 @@ import os
 import sys
 import threading
 import time
+
+
+# the spool's flush interval (``SpoolWriter.flush_seconds``) and the
+# phase its timer is started at, against whole wall-clock seconds
+FLUSH_S = 0.5
+FLUSH_PHASE = 0.25
+
+
+def _pin_flush_phase() -> None:
+    """Hold the event loop after the query starts until the flush phase.
+
+    ``run_daemon`` starts the spool's flush timer, then blocks its loop in
+    ``pipeline.start_envelope_pipeline``; the timer's first, overdue
+    flush runs when that returns and sets the phase of all later ones."""
+    from eventstreamd_spark.streaming import pipeline
+
+    original = pipeline.start_envelope_pipeline
+
+    def start_then_align(*args, **kwargs):
+        query = original(*args, **kwargs)
+        time.sleep((FLUSH_PHASE - time.time()) % FLUSH_S)
+        return query
+
+    pipeline.start_envelope_pipeline = start_then_align
 
 
 def _install_tracing(spark, trace: dict) -> None:
@@ -123,6 +156,7 @@ def main() -> None:
     t0 = time.time()
     spark = get_spark("perfbench-daemon")
     trace = {"session_start": [t0, time.time()], "push": [], "progress": []}
+    _pin_flush_phase()
     if args.trace:
         _install_tracing(spark, trace)
     try:

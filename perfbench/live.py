@@ -1,5 +1,7 @@
-"""Live workloads: a daemon process, driven from this single-threaded
-asyncio process, which plays the producer and every SSE subscriber.
+"""Live workloads: a daemon process, driven from one asyncio loop in this
+process, which plays the producer and every SSE subscriber.  The only
+other thread samples the daemon's resident set, so its blocking /proc
+reads never delay a send or a frame's receipt time.
 
 The producer runs an open loop: each event is due at a time fixed by
 ``schedule`` whatever the daemon does, and each delivery's latency is
@@ -33,8 +35,8 @@ MAX_LATENESS_S = 0.25
 # events due in the first WARMUP_S seconds warm the daemon up; the first
 # RAMP_S of them come at RAMP_FRAC of the rate, so the first, cold
 # micro-batches leave no backlog for the measured window to drain
-WARMUP_S = 25.0
-RAMP_S = 5.0
+WARMUP_S = 16.0
+RAMP_S = 10.0
 RAMP_FRAC = 0.1
 # after the window, events keep coming for at most DRAIN_S seconds while
 # the window's last deliveries arrive; then the run waits DRAIN_S more
@@ -90,7 +92,8 @@ class Daemon:
 
     async def _sample_rss(self) -> None:
         while True:
-            self.peak_rss_kb = max(self.peak_rss_kb, tree_rss_kb(self.proc.pid))
+            rss = await asyncio.to_thread(tree_rss_kb, self.proc.pid)
+            self.peak_rss_kb = max(self.peak_rss_kb, rss)
             await asyncio.sleep(0.2)
 
     async def wait_ready(self, timeout: float = 120.0) -> None:

@@ -52,6 +52,25 @@ def _median(values: list[float]) -> float:
     return statistics.median(values) if values else 0.0
 
 
+# every metric ``live_layers`` reports, with its unit
+UNITS = {
+    "session.start_s": "s",
+    "socket_spool.files": "count",
+    "pipeline.batches": "count",
+    "pipeline.rows": "count",
+    "pipeline.busy_frac": "ratio",
+    "http_frontend.jobs_per_push": "count",
+    "http_frontend.push_p50_s": "s",
+    "http_frontend.push_max_s": "s",
+    "http_frontend.frames": "count",
+    "trace.latency_p50_s": "s",
+    "trace.hop_p50_sum_s": "s",
+    "trace.unjoined": "count",
+    **{name: "s" for name in DURATIONS},
+    **{name: "s" for name in HOPS},
+}
+
+
 def live_layers(trace_path, subs, due, t0_wall, wall0, n_warm, n_end, latency_p50):
     """``{metric: (value, unit)}`` for the traced run's window."""
     with open(trace_path, encoding="utf-8") as f:
@@ -107,22 +126,22 @@ def live_layers(trace_path, subs, due, t0_wall, wall0, n_warm, n_end, latency_p5
         for p in trace["progress"]
         if window_start <= _epoch(p["timestamp"]) < window_end
     )
-    layers = {
-        "session.start_s": (trace["session_start"][1] - trace["session_start"][0], "s"),
-        "socket_spool.files": (len(window_files), "count"),
-        "pipeline.batches": (len(batches), "count"),
-        "pipeline.rows": (sum(b["rows"] for b in batches), "count"),
-        "pipeline.busy_frac": (busy_ms / 1000.0 / (window_end - window_start), "ratio"),
-        "http_frontend.jobs_per_push": (_median([p["jobs"] for p in pushes]), "count"),
-        "http_frontend.push_p50_s": (_median([p["end"] - p["start"] for p in pushes]), "s"),
-        "http_frontend.push_max_s": (max((p["end"] - p["start"] for p in pushes), default=0.0), "s"),
-        "http_frontend.frames": (len(hops[0]), "count"),
-        "trace.latency_p50_s": (latency_p50, "s"),
-        "trace.hop_p50_sum_s": (sum(_median(h) for h in hops), "s"),
-        "trace.unjoined": (unjoined, "count"),
+    values = {
+        "session.start_s": trace["session_start"][1] - trace["session_start"][0],
+        "socket_spool.files": len(window_files),
+        "pipeline.batches": len(batches),
+        "pipeline.rows": sum(b["rows"] for b in batches),
+        "pipeline.busy_frac": busy_ms / 1000.0 / (window_end - window_start),
+        "http_frontend.jobs_per_push": _median([p["jobs"] for p in pushes]),
+        "http_frontend.push_p50_s": _median([p["end"] - p["start"] for p in pushes]),
+        "http_frontend.push_max_s": max((p["end"] - p["start"] for p in pushes), default=0.0),
+        "http_frontend.frames": len(hops[0]),
+        "trace.latency_p50_s": latency_p50,
+        "trace.hop_p50_sum_s": sum(_median(h) for h in hops),
+        "trace.unjoined": unjoined,
     }
     for name, key in DURATIONS.items():
-        layers[name] = (_median([b["duration_ms"].get(key, 0) / 1000.0 for b in batches]), "s")
-    for name, values in zip(HOPS, hops):
-        layers[name] = (_median(values), "s")
-    return layers
+        values[name] = _median([b["duration_ms"].get(key, 0) / 1000.0 for b in batches])
+    for name, hop in zip(HOPS, hops):
+        values[name] = _median(hop)
+    return {name: (values[name], unit) for name, unit in UNITS.items()}

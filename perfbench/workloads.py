@@ -30,64 +30,28 @@ class LiveSpec:
 
 # why each workload exists: BENCHMARK.json and README.md
 LIVE = {
-    "live_fanout16": LiveSpec(
-        subscribers=16,
-        subscriptions=16,
-        rate=200.0,
-        payload_bytes=100,
-    ),
-    "live_shared8": LiveSpec(
-        subscribers=8,
-        subscriptions=2,
-        rate=250.0,
-        payload_bytes=900,
+    "live_fanout": LiveSpec(
+        subscribers=12,
+        subscriptions=1,
+        rate=300.0,
+        payload_bytes=300,
     ),
 }
 
-# permissive subscriptions: every event of the subsystem whose fields have
-# the filtered JSON types matches
-SHARED = (
-    ("alpha", ("seq>=0",)),
-    ("beta", ("level>=0", "user>=''")),
-)
-
-
-# filter templates over the generated payload: typed int, string and date
-# comparisons on top-level and nested fields.  The seed moves each literal
-# only within a narrow band, so a template matches about the same share
-# of events whatever the seed.
-FILTERS = (
-    ("level", lambda r: f"level={r.randint(0, 9)}"),
-    ("level", lambda r: f"level>={r.randint(4, 5)}"),
-    ("user", lambda r: f"user<'u{r.randint(45, 55):03d}'"),
-    ("user", lambda r: f"user>='u{r.randint(45, 55):03d}'"),
-    ("m.k", lambda r: f"m.k<={r.randint(9, 10)}"),
-    ("m.k", lambda r: f"m.k>{r.randint(9, 10)}"),
-    ("m.tag", lambda r: f"m.tag='{r.choice(TAGS)}'"),
-    ("day", lambda r: f"day<=2024-{r.randint(6, 7):02d}-15"),
-    ("day", lambda r: f"day>2024{r.randint(6, 7):02d}15"),
-)
-
 
 def _subscriptions(spec: LiveSpec, rng: random.Random) -> list[tuple[str, tuple[str, ...]]]:
-    if spec.subscriptions < spec.subscribers:
-        return list(SHARED[: spec.subscriptions])
-    # which templates each subscription combines is fixed, so every seed
-    # asks the daemon for the same work; the seed picks the literals
-    shapes = random.Random(spec.subscriptions)
-    subs: list[tuple[str, tuple[str, ...]]] = []
-    for i in range(spec.subscriptions):
-        subsystem = SUBSYSTEMS[i % len(SUBSYSTEMS)]
-        while True:  # at most one template per field
-            templates = shapes.sample(FILTERS, shapes.choice((1, 2, 2, 3)))
-            if len({field for field, _ in templates}) == len(templates):
-                break
-        while True:
-            sub = (subsystem, tuple(make(rng) for _, make in templates))
-            if sub not in subs:
-                break
-        subs.append(sub)
-    return subs
+    """One subscription per subsystem in turn: an int and a string
+    comparison.  The fields compared are fixed, so every seed asks the
+    daemon for the same work; the seed moves each literal only within a
+    narrow band, so a subscription matches about the same share of events
+    (~4 %) whatever the seed."""
+    return [
+        (
+            SUBSYSTEMS[i],
+            (f"level>={rng.randint(4, 5)}", f"user>='u{rng.randint(45, 55):03d}'"),
+        )
+        for i in range(spec.subscriptions)
+    ]
 
 
 def _payload(rng: random.Random, seq: int, size: int) -> dict:
