@@ -181,13 +181,6 @@ def _canonical_codes(bits, vals):
     return out
 
 
-def _decode_map(bits, vals):
-    """-> {(length, code): symbol} for the bit-at-a-time decoder."""
-    return {
-        (ln, code): sym for sym, (code, ln) in _canonical_codes(bits, vals).items()
-    }
-
-
 # LUT cache for the fast decoder: (bits, vals) -> 65536-entry list where
 # entry = (code_length << 8) | symbol for every 16-bit window beginning
 # with that code, 0 for windows no code covers.  Keyed on the wire-format
@@ -196,6 +189,9 @@ def _decode_map(bits, vals):
 # process — including reused Spark Python workers (round 13, guide §4.5:
 # heavyweight init once, amortized over every task).
 _HUFF_LUT_CACHE: dict = {}
+# distinct tables are few in a real corpus; corrupt ones are not, so the
+# cache starts over rather than grow without bound
+_HUFF_LUT_CACHE_MAX = 64
 
 
 def _huff_lut(bits, vals) -> list:
@@ -206,6 +202,8 @@ def _huff_lut(bits, vals) -> list:
         code = 0
         k = 0
         for ln in range(1, 17):
+            if code + bits[ln - 1] > 1 << ln:
+                raise ValueError("Huffman table overflows its code space")
             for _ in range(bits[ln - 1]):
                 sym = vals[k]
                 k += 1
@@ -215,6 +213,8 @@ def _huff_lut(bits, vals) -> list:
                 )
                 code += 1
             code <<= 1
+        if len(_HUFF_LUT_CACHE) >= _HUFF_LUT_CACHE_MAX:
+            _HUFF_LUT_CACHE.clear()
         _HUFF_LUT_CACHE[key] = lut
     return lut
 
@@ -277,76 +277,13 @@ class _BitWriter:
             self.write((1 << pad) - 1, pad)  # pad with 1-bits
 
 
-class _BitReader:
-    """Entropy-segment bit reader: un-stuffs 0xFF00; stops at any other
-    marker (the MCU loop resyncs across RSTn itself)."""
-
-    def __init__(self, data: bytes, pos: int) -> None:
-        self.data = data
-        self.pos = pos
-        self.acc = 0
-        self.n = 0
-
-    def _fill(self) -> None:
-        if self.pos >= len(self.data):
-            raise ValueError("entropy data exhausted")
-        b = self.data[self.pos]
-        if b == 0xFF:
-            nxt = self.data[self.pos + 1] if self.pos + 1 < len(self.data) else None
-            if nxt == 0x00:
-                self.pos += 2
-            else:
-                raise ValueError("marker inside entropy data")
-        else:
-            self.pos += 1
-        self.acc = (self.acc << 8) | b
-        self.n += 8
-
-    def bit(self) -> int:
-        if self.n == 0:
-            self._fill()
-        self.n -= 1
-        return (self.acc >> self.n) & 1
-
-    def receive(self, s: int) -> int:
-        v = 0
-        for _ in range(s):
-            v = (v << 1) | self.bit()
-        return v
-
-    def huff(self, table: dict) -> int:
-        code = 0
-        for ln in range(1, 17):
-            code = (code << 1) | self.bit()
-            sym = table.get((ln, code))
-            if sym is not None:
-                return sym
-        raise ValueError("invalid Huffman code")
-
-    def align_to_marker(self) -> int:
-        """Drop partial bits, consume the next marker, return its second
-        byte (used for RSTn resync)."""
-        self.acc = 0
-        self.n = 0
-        while self.pos + 1 < len(self.data):
-            if self.data[self.pos] == 0xFF and self.data[self.pos + 1] != 0x00:
-                m = self.data[self.pos + 1]
-                self.pos += 2
-                return m
-            self.pos += 1
-        raise ValueError("expected restart marker")
-
-
 class _FastBitReader:
-    """LUT-driven entropy reader over ONE pre-un-stuffed segment
-    (round 13, guide §4.6: the bit-at-a-time ``_BitReader`` was ~60% of
-    the media decode kernel's profile — ``bit()``/``huff()`` walked
-    Huffman codes one method call per BIT).  This reader peeks a 16-bit
-    window with one ``int.from_bytes`` and resolves the whole code via
-    the ``_huff_lut`` table: two C-level calls per SYMBOL.  Reads past
-    the segment end raise the same ``ValueError`` contract as the old
-    reader (windows are zero-padded for peeking, but consuming bits
-    beyond the segment raises)."""
+    """LUT-driven entropy reader over ONE pre-un-stuffed segment: it
+    peeks a 16-bit window with one ``int.from_bytes`` and resolves the
+    whole code via the ``_huff_lut`` table, two C-level calls per
+    SYMBOL (a bit-at-a-time reader was ~60% of the media decode
+    kernel's profile).  Windows are zero-padded for peeking, but
+    consuming bits beyond the segment raises ``ValueError``."""
 
     __slots__ = ("data", "bitpos", "nbits")
 
@@ -382,11 +319,6 @@ class _FastBitReader:
         if len(chunk) < 3:
             v <<= (3 - len(chunk)) * 8
         return ((v >> (8 - (bp & 7))) & 0xFFFF) >> (16 - s)
-
-
-def _extend(v: int, s: int) -> int:
-    """T.81 F.2.2.1 EXTEND: map the s received bits to a signed value."""
-    return v - ((1 << s) - 1) if v < (1 << (s - 1)) else v
 
 
 def _amplitude(v: int) -> tuple[int, int]:
@@ -569,6 +501,10 @@ def encode_jpeg(
 
 SOI = b"\xff\xd8"
 
+# declared frames larger than this are refused before any coefficient
+# buffer is allocated (SOF0 can claim 65535 x 65535 in four bytes)
+MAX_PIXELS = 1 << 24
+
 
 def decode_jpeg(blob: bytes) -> tuple[int, int, int, bytes]:
     """Decode a baseline (SOF0) JFIF JPEG -> (width, height, channels,
@@ -598,16 +534,13 @@ def decode_jpeg(blob: bytes) -> tuple[int, int, int, bytes]:
             while i < len(body):
                 pq, tq = body[i] >> 4, body[i] & 0xF
                 i += 1
-                if pq == 0:
-                    tbl = np.frombuffer(body[i : i + 64], dtype=np.uint8).astype(
-                        np.int64
-                    )
-                    i += 64
-                else:
-                    tbl = np.frombuffer(
-                        body[i : i + 128], dtype=">u2"
-                    ).astype(np.int64)
-                    i += 128
+                size = 64 if pq == 0 else 128
+                if i + size > len(body):
+                    raise ValueError("truncated DQT")
+                tbl = np.frombuffer(
+                    body[i : i + size], dtype=np.uint8 if pq == 0 else ">u2"
+                ).astype(np.int64)
+                i += size
                 quant[tq] = tbl
         elif marker == 0xC4:  # DHT
             i = 0
@@ -616,12 +549,22 @@ def decode_jpeg(blob: bytes) -> tuple[int, int, int, bytes]:
                 bits = tuple(body[i + 1 : i + 17])
                 n = sum(bits)
                 vals = tuple(body[i + 17 : i + 17 + n])
+                if len(bits) != 16 or len(vals) != n:
+                    raise ValueError("truncated DHT")
                 huff[(cls, tid)] = _huff_lut(bits, vals)
                 i += 17 + n
         elif marker == 0xC0:  # SOF0 baseline
+            if len(body) < 6:
+                raise ValueError("truncated SOF0")
             prec, h, w, nc = struct.unpack(">BHHB", body[:6])
             if prec != 8:
                 raise ValueError(f"unsupported precision {prec}")
+            if nc not in (1, 3):
+                raise ValueError(f"unsupported component count {nc}")
+            if not 0 < w * h <= MAX_PIXELS:
+                raise ValueError(f"unsupported dimensions {w}x{h}")
+            if len(body) < 6 + 3 * nc:
+                raise ValueError("truncated SOF0")
             comps = []
             for ci in range(nc):
                 cid, hv, tq = body[6 + 3 * ci : 9 + 3 * ci]
@@ -631,11 +574,15 @@ def decode_jpeg(blob: bytes) -> tuple[int, int, int, bytes]:
                         0xCD, 0xCE, 0xCF):
             raise ValueError(f"unsupported SOF marker 0x{marker:02x}")
         elif marker == 0xDD:  # DRI
+            if len(body) < 2:
+                raise ValueError("truncated DRI")
             (restart_interval,) = struct.unpack(">H", body[:2])
         elif marker == 0xDA:  # SOS
             if frame is None:
                 raise ValueError("SOS before SOF")
-            ns = body[0]
+            ns = body[0] if body else 0
+            if not ns or len(body) < 1 + 2 * ns:
+                raise ValueError("truncated SOS")
             sel = {}
             for si in range(ns):
                 cs, tt = body[1 + 2 * si : 3 + 2 * si]
@@ -651,15 +598,29 @@ def decode_jpeg(blob: bytes) -> tuple[int, int, int, bytes]:
     w, h = frame["w"], frame["h"]
     hmax = max(c["h"] for c in comps)
     vmax = max(c["v"] for c in comps)
-    if hmax < 1 or vmax < 1 or hmax > 4 or vmax > 4:
+    if any(
+        not (1 <= c["h"] <= 4 and 1 <= c["v"] <= 4)
+        or hmax % c["h"]
+        or vmax % c["v"]
+        for c in comps
+    ):
         raise ValueError("bad sampling factors")
     mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
     mcus_y = (h + 8 * vmax - 1) // (8 * vmax)
+    # every coded block takes at least 2 bits (a DC code and an EOB),
+    # so the entropy data bounds the block count before allocation
+    n_blocks = mcus_x * mcus_y * sum(c["h"] * c["v"] for c in comps)
+    if n_blocks > 4 * (len(blob) - data_pos):
+        raise ValueError("frame larger than its entropy data")
     for c in comps:
+        if c["id"] not in sel:
+            raise ValueError(f"component {c['id']} missing from scan")
+        td, ta = sel[c["id"]]
+        if (0, td) not in huff or (1, ta) not in huff:
+            raise ValueError("missing Huffman table")
         c["bw"] = mcus_x * c["h"]
         c["bh"] = mcus_y * c["v"]
         c["coef"] = np.zeros((c["bh"] * c["bw"], 64), dtype=np.int64)
-        td, ta = sel[c["id"]]
         c["dc_tab"] = huff[(0, td)]
         c["ac_tab"] = huff[(1, ta)]
         if c["tq"] not in quant:
@@ -756,8 +717,6 @@ def decode_jpeg(blob: bytes) -> tuple[int, int, int, bytes]:
 
     if len(comps) == 1:
         return w, h, 1, planes[0].astype(np.uint8).tobytes()
-    if len(comps) != 3:
-        raise ValueError(f"unsupported component count {len(comps)}")
     y, cb, cr = (p.astype(np.int64) for p in planes)
     cb -= 128
     cr -= 128

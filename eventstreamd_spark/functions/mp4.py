@@ -218,12 +218,21 @@ def _find_path(blob: bytes, start: int, end: int, path: list[bytes]):
     raise ValueError(f"missing box {b'/'.join(path).decode()}")
 
 
+def _unpack(fmt: str, blob: bytes, pos: int, end: int) -> tuple:
+    """struct.unpack_from that stays inside [pos, end): a table that
+    claims more entries than its box holds is malformed."""
+    if pos + struct.calcsize(fmt) > end:
+        raise ValueError("box too short for its table")
+    return struct.unpack_from(fmt, blob, pos)
+
+
 def decode_mp4_samples(blob: bytes) -> tuple[int, int, bytes, list[bytes]]:
     """MP4 bytes -> (width, height, fourcc, [sample bytes]) from the
     first video track's REAL sample tables — stsd for the entry,
     stsz for sizes, stsc runs + stco/co64 offsets to locate every
     sample inside the file.  General over multi-chunk layouts, not
-    just this module's single-chunk encoder output."""
+    just this module's single-chunk encoder output.  Raises
+    ValueError on any malformed or inconsistent table."""
     if len(blob) < 12 or blob[4:8] != b"ftyp":
         raise ValueError("not an ISO-BMFF payload")
     moov_s, moov_e = _find_path(blob, 0, len(blob), [b"moov"])
@@ -231,44 +240,42 @@ def decode_mp4_samples(blob: bytes) -> tuple[int, int, bytes, list[bytes]]:
         blob, moov_s, moov_e, [b"trak", b"mdia", b"minf", b"stbl"]
     )
     boxes = {t: (s, e) for t, s, e in _walk(blob, stbl_s, stbl_e)}
+    chunk_box = b"stco" if b"stco" in boxes else b"co64"
+    for need in (b"stsd", b"stsz", b"stsc", chunk_box):
+        if need not in boxes:
+            raise ValueError(f"missing box {need.decode()}")
+
     s, e = boxes[b"stsd"]
-    entry = blob[s + 8 :]  # skip version/flags + entry_count
-    fourcc = entry[4:8]
-    width, height = struct.unpack(">HH", entry[32:36])
+    # version/flags + entry_count, then the entry's size/fourcc header
+    fourcc = _unpack(">4s", blob, s + 12, e)[0]
+    width, height = _unpack(">HH", blob, s + 40, e)
 
     s, e = boxes[b"stsz"]
-    fixed, n = struct.unpack(">II", blob[s + 4 : s + 12])
+    fixed, n = _unpack(">II", blob, s + 4, e)
     if fixed:
+        if fixed * n > len(blob):
+            raise ValueError("samples larger than the file")
         sizes = [fixed] * n
     else:
-        sizes = list(
-            struct.unpack(f">{n}I", blob[s + 12 : s + 12 + 4 * n])
-        )
+        sizes = list(_unpack(f">{n}I", blob, s + 12, e))
 
-    if b"stco" in boxes:
-        s, e = boxes[b"stco"]
-        (n_chunks,) = struct.unpack(">I", blob[s + 4 : s + 8])
-        offsets = list(
-            struct.unpack(f">{n_chunks}I", blob[s + 8 : s + 8 + 4 * n_chunks])
-        )
-    else:
-        s, e = boxes[b"co64"]
-        (n_chunks,) = struct.unpack(">I", blob[s + 4 : s + 8])
-        offsets = list(
-            struct.unpack(f">{n_chunks}Q", blob[s + 8 : s + 8 + 8 * n_chunks])
-        )
+    s, e = boxes[chunk_box]
+    (n_chunks,) = _unpack(">I", blob, s + 4, e)
+    kind = "I" if chunk_box == b"stco" else "Q"
+    offsets = list(_unpack(f">{n_chunks}{kind}", blob, s + 8, e))
 
     s, e = boxes[b"stsc"]
-    (n_runs,) = struct.unpack(">I", blob[s + 4 : s + 8])
+    (n_runs,) = _unpack(">I", blob, s + 4, e)
     runs = [
-        struct.unpack(">III", blob[s + 8 + 12 * i : s + 20 + 12 * i])
-        for i in range(n_runs)
+        _unpack(">III", blob, s + 8 + 12 * i, e) for i in range(n_runs)
     ]  # (first_chunk, samples_per_chunk, sample_description_index)
 
     # expand sample-to-chunk runs into per-chunk sample counts
     per_chunk: list[int] = []
     for i, (first, spc, _sdi) in enumerate(runs):
         last = runs[i + 1][0] - 1 if i + 1 < len(runs) else n_chunks
+        if first != len(per_chunk) + 1 or last > n_chunks:
+            raise ValueError("sample-to-chunk runs out of order")
         per_chunk += [spc] * (last - first + 1)
 
     samples: list[bytes] = []
@@ -278,6 +285,8 @@ def decode_mp4_samples(blob: bytes) -> tuple[int, int, bytes, list[bytes]]:
         for _ in range(count):
             if si >= len(sizes):
                 break
+            if pos + sizes[si] > len(blob):
+                raise ValueError("sample outside the file")
             samples.append(blob[pos : pos + sizes[si]])
             pos += sizes[si]
             si += 1

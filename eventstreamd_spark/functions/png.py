@@ -28,6 +28,10 @@ import zlib
 
 SIGNATURE = b"\x89PNG\r\n\x1a\n"
 
+# declared images larger than this are refused before anything is
+# inflated or allocated (a few bytes of IHDR can claim 4G x 4G)
+MAX_PIXELS = 1 << 24
+
 _CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
 
 
@@ -120,6 +124,8 @@ def decode_png(blob: bytes) -> tuple[int, int, int, bytes]:
         if len(body) != ln:
             raise ValueError("truncated chunk")
         if tag == b"IHDR":
+            if ln != 13:
+                raise ValueError("bad IHDR length")
             width, height, bit_depth, color_type, comp, filt, interlace = (
                 struct.unpack(">IIBBBBB", body)
             )
@@ -140,10 +146,19 @@ def decode_png(blob: bytes) -> tuple[int, int, int, bytes]:
         raise ValueError("interlaced PNG unsupported")
     if color_type not in _CHANNELS:
         raise ValueError(f"unsupported color type {color_type}")
+    if not 0 < width * height <= MAX_PIXELS:
+        raise ValueError(f"unsupported dimensions {width}x{height}")
     channels = _CHANNELS[color_type]
     stride = width * channels
-    raw = zlib.decompress(bytes(idat))
-    if len(raw) != (stride + 1) * height:
+    expected = (stride + 1) * height
+    inflater = zlib.decompressobj()
+    try:
+        # at most one byte past the expected size: enough to see a
+        # mismatch, never a decompression bomb
+        raw = inflater.decompress(bytes(idat), expected + 1)
+    except zlib.error as exc:
+        raise ValueError(f"corrupt IDAT stream: {exc}") from exc
+    if len(raw) != expected or not inflater.eof:
         raise ValueError("decompressed size mismatch")
     import numpy as np
 
@@ -185,8 +200,10 @@ def decode_png(blob: bytes) -> tuple[int, int, int, bytes]:
         out[r * stride : (r + 1) * stride] = line
         prev = bytes(line)
     if color_type == 3:
-        if not palette:
-            raise ValueError("palette image without PLTE")
+        if not palette or len(palette) % 3:
+            raise ValueError("palette image without a valid PLTE")
+        if max(out) >= len(palette) // 3:
+            raise ValueError("palette index out of range")
         rgb = bytearray(width * height * 3)
         for i, idx in enumerate(out):
             rgb[i * 3 : i * 3 + 3] = palette[idx * 3 : idx * 3 + 3]

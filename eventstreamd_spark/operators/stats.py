@@ -50,64 +50,10 @@ def server_stats(df: DataFrame) -> DataFrame:
     )
 
 
-def with_observed_metrics(df: DataFrame, name: str = "evt_metrics") -> DataFrame:
-    """Attach zero-cost observed metrics to a (batch or streaming) plan.
-
-    ``df.observe`` computes the aggregates inline during normal
-    execution — no extra pass, no extra shuffle — and surfaces them per
-    micro-batch through StreamingQueryListener / QueryExecutionListener.
-    This is the Spark-native home for the reference's monotone counters
-    (dispatcher.py:56): operational metrics ride the query instead of
-    being kept in daemon state.
-    """
-    return df.observe(
-        name,
-        F.count(F.lit(1)).alias("n_events"),
-        F.approx_count_distinct("subsystem").alias("n_subsystems"),
-    )
-
-
-class MetricsCollector:
-    """StreamingQueryListener that accumulates observed metrics per
-    micro-batch — the /stats counter feed for the streaming daemon."""
-
-    def __init__(self, metric_name: str = "evt_metrics") -> None:
-        self.metric_name = metric_name
-        self.totals: dict[str, int] = {"n_events": 0, "batches": 0}
-
-    def attach(self, spark: SparkSession) -> "MetricsCollector":
-        from pyspark.sql.streaming import StreamingQueryListener
-
-        collector = self
-
-        class _Listener(StreamingQueryListener):
-            def onQueryStarted(self, event):
-                pass
-
-            def onQueryProgress(self, event):
-                row = event.progress.observedMetrics.get(collector.metric_name)
-                if row is not None:
-                    collector.totals["n_events"] += row["n_events"]
-                    collector.totals["batches"] += 1
-
-            def onQueryIdle(self, event):
-                pass
-
-            def onQueryTerminated(self, event):
-                pass
-
-        self._listener = _Listener()
-        spark.streams.addListener(self._listener)
-        return self
-
-    def detach(self, spark: SparkSession) -> None:
-        spark.streams.removeListener(self._listener)
-
-
 def quality_observation(df: DataFrame, cols: list[str]):
     """One-pass batch data-quality counters: total rows + per-column
-    null counts computed WHILE the main job runs (pyspark Observation —
-    same mechanism as with_observed_metrics, batch-flavored API).
+    null counts computed WHILE the main job runs (pyspark Observation,
+    the batch API over ``DataFrame.observe``).
 
     At 100 TB a separate `df.filter(isnull).count()` audit is a second
     full scan; an Observation rides the action the pipeline was already

@@ -67,6 +67,39 @@ _TIMESTAMP_COLS: dict[str, list[str]] = {
 }
 
 
+# the heap default never exceeds this, whatever the host's size
+MAX_DRIVER_MEMORY_MB = 48 * 1024
+
+_CGROUP_MEMORY_LIMITS = (
+    "/sys/fs/cgroup/memory.max",  # cgroup v2
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",  # cgroup v1
+)
+
+
+def host_memory_bytes() -> int:
+    """Memory this process can use: physical memory, or the cgroup
+    limit when that is smaller (a container on a bigger machine)."""
+    limit = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for path in _CGROUP_MEMORY_LIMITS:
+        try:
+            with open(path) as f:
+                value = f.read().strip()
+        except OSError:
+            continue
+        if value.isdigit():  # "max" means no cgroup limit
+            limit = min(limit, int(value))
+    return limit
+
+
+def default_driver_memory(mem_bytes: int) -> str:
+    """``spark.driver.memory`` for a host with ``mem_bytes`` of memory:
+    half of it, at most 48g and at least 1g.  In local mode the driver
+    JVM runs every task, and the other half is left to the Python
+    workers and the OS."""
+    mb = min(MAX_DRIVER_MEMORY_MB, mem_bytes // 2 // 2**20)
+    return f"{max(1024, mb)}m"
+
+
 def get_spark(
     app_name: str = "eventstreamd-spark",
     cpus: int | None = None,
@@ -85,8 +118,18 @@ def get_spark(
       high initial value.
     - session timezone pinned to UTC so timestamp semantics are portable
       (and match the DuckDB correctness oracle).
+
+    Resources follow the host unless overridden: ``cpus`` (else
+    ``$SPARK_GRAFT_CPUS``) defaults to the cores this process may run
+    on, and the driver heap (else ``$SPARK_GRAFT_DRIVER_MEM``) to
+    ``default_driver_memory`` of the host's memory.
     """
-    cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = cpus or int(
+        os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    )
+    driver_memory = os.environ.get(
+        "SPARK_GRAFT_DRIVER_MEM"
+    ) or default_driver_memory(host_memory_bytes())
     shuffle = shuffle_partitions or cpus
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -117,7 +160,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # keep catalog state out of the repo: managed tables (bucketing)

@@ -26,14 +26,13 @@ from __future__ import annotations
 import asyncio
 import datetime
 import json
-import logging
+import operator
 from collections.abc import Awaitable, Callable
 from dataclasses import dataclass, field
+from functools import reduce
 from urllib.parse import parse_qs, urlsplit
 
 from eventstreamd_spark.operators.filters import parse_filter
-
-logger = logging.getLogger(__name__)
 
 PING_INTERVAL = 20.0  # reference config.py:11
 CRLF = "\r\n"
@@ -105,52 +104,55 @@ class ListenerRegistry:
         self.connections.pop(cid, None)
 
     def push_batch(self, batch_df, epoch_id: int) -> None:
-        """foreachBatch sink over *validated envelopes*.
+        """foreachBatch sink over *validated envelopes*: one Spark job.
 
         Subscriptions are dynamic (reference EP2), so the listener set
-        is read per micro-batch: for each distinct (subsystem, filters)
-        among live connections, the batch is filtered with the SAME
-        compiled Catalyst predicates the batch layer uses and frames
-        are rendered in Spark — Python only fans finished frames into
-        queues.  New subscribers start receiving at the next
-        micro-batch, no query restart.
+        is read per micro-batch.  Each distinct (subsystem, filters)
+        becomes one predicate — the SAME compiled Catalyst predicate the
+        batch layer uses, over a payload parsed once — and a single
+        ``collect`` returns every event that matches any of them, with
+        its rendered frame and one hit flag per subscription.  Python
+        then fans each frame, in event order, to the connections of
+        every subscription it hit (the reference's dispatch loop,
+        dispatcher.py:93-95 + listener.py:62).  New subscribers start
+        receiving at the next micro-batch, no query restart.
         """
         from pyspark.sql import functions as F
 
         from eventstreamd_spark.functions.sse import sse_frame
-        from eventstreamd_spark.operators.filters import compile_filters, parse_filter
+        from eventstreamd_spark.operators.routing import (
+            Listener,
+            listener_predicate,
+        )
 
-        conns = list(self.connections.items())
-        if not conns:
-            return
         groups: dict[tuple[str, tuple[str, ...]], list[Connection]] = {}
-        for _, conn in conns:
+        for conn in list(self.connections.values()):
             groups.setdefault((conn.subsystem, conn.filters), []).append(conn)
         if not groups:
             return
-        # parse payloads and render frames ONCE for the whole batch;
-        # per-group work is then a predicate over the parsed variant
-        # (otherwise every listener group re-parses every event's JSON)
-        parsed = batch_df.withColumn(
-            "__v", F.try_parse_json(F.col("data"))
-        ).withColumn(
-            "__frame",
-            sse_frame(F.col("event_type"), F.col("data"), F.col("id")),
+        hits = [
+            listener_predicate(
+                Listener(str(i), subsystem, filters),
+                subsystem_col="subsystem",
+                parsed_payload=F.col("__v"),
+            )
+            for i, (subsystem, filters) in enumerate(groups)
+        ]
+        rows = (
+            batch_df.withColumn("__v", F.try_parse_json(F.col("data")))
+            .filter(reduce(operator.or_, hits))
+            .select(
+                sse_frame(F.col("event_type"), F.col("data"), F.col("id")),
+                *hits,
+            )
+            .collect()
         )
-        parsed.persist()
-        try:
-            for (subsystem, filters), members in groups.items():
-                specs = [parse_filter(f) for f in filters]
-                matched = parsed.filter(
-                    (F.col("subsystem") == subsystem)
-                    & compile_filters(specs, F.col("__v"), pre_parsed=True)
-                ).select(F.col("__frame").alias("frame"))
-                frames = [r["frame"] for r in matched.collect()]
-                for conn in members:
-                    for frame in frames:
+        members = list(groups.values())
+        for frame, *hit in rows:
+            for conns, matched in zip(members, hit):
+                if matched:
+                    for conn in conns:
                         self._enqueue(conn, frame)
-        finally:
-            parsed.unpersist()
 
     def _enqueue(self, conn: Connection, frame: str) -> None:
         def put() -> None:
@@ -182,20 +184,6 @@ class ListenerRegistry:
             "total-connections": self.total_connections,
             "connections": [one(c) for c in self.connections.values()],
         }
-
-    def dispatch_frame(
-        self, subsystem: str, filters: tuple[str, ...], frame: str
-    ) -> None:
-        """Deliver one rendered frame to every connection subscribed as
-        (subsystem, filters).  Called from the frame-ingest server (on
-        the event loop) or any thread (hops through the loop)."""
-        for conn in list(self.connections.values()):
-            if conn.subsystem == subsystem and conn.filters == filters:
-                self._enqueue(conn, frame)
-
-
-def listener_key(subsystem: str, filters: tuple[str, ...]) -> str:
-    return f"{subsystem}|{','.join(filters)}"
 
 
 def _chunk(data: str) -> bytes:
@@ -387,135 +375,6 @@ async def handle_http(
             writer.close()
         except Exception:
             pass
-
-
-async def run_frame_ingest(
-    host: str, port: int, registry: ListenerRegistry
-) -> asyncio.AbstractServer:
-    """Frame-ingest endpoint for EXECUTOR-SIDE fan-out.
-
-    Accepts newline-delimited JSON ``{"subsystem": .., "filters": [..],
-    "frame": ..}`` from Spark tasks and dispatches to subscribed
-    connection queues.  This is the listener-tier half of the
-    100x-scale push path: at cluster scale one of these runs per
-    listener-tier node (executors write to whichever node owns the
-    subscription, e.g. via consistent hashing on the group key); in
-    local mode it shares the event loop with the SSE server.
-
-    Use ``server.sockets[0].getsockname()[1]`` for the bound port when
-    started with port 0.
-    """
-
-    async def handler(
-        reader: asyncio.StreamReader, writer: asyncio.StreamWriter
-    ) -> None:
-        try:
-            while True:
-                line = await reader.readline()
-                if not line:
-                    break
-                try:
-                    msg = json.loads(line)
-                    registry.dispatch_frame(
-                        msg["subsystem"], tuple(msg["filters"]), msg["frame"]
-                    )
-                except (ValueError, KeyError, TypeError):
-                    logger.warning("frame-ingest: dropping malformed line")
-        finally:
-            try:
-                writer.close()
-            except Exception:
-                pass
-
-    return await asyncio.start_server(handler, host, port)
-
-
-class DistributedPusher:
-    """Executor-side SSE fan-out: the ``foreachBatch`` sink for clusters.
-
-    ``ListenerRegistry.push_batch`` collects matched frames to the
-    driver — faithful to the reference's single-process design and fine
-    at daemon scale, but at 1000 executors every delivered frame would
-    transit one Python driver thread.  This pusher keeps delivery on
-    the executors: per micro-batch it builds ONE tagged union plan
-    (each live (subsystem, filters) group's predicate over the
-    shared parsed/framed projection) and ships it with
-    ``foreachPartition`` — every task opens a socket to the frame-
-    ingest tier and writes its partition's frames directly.  The
-    driver only reads the (tiny) subscription table; frames never
-    leave the executors until the listener tier.
-
-    SCALE.md documents the cutover: in-process ``push_batch`` below
-    ~10^4 frames/batch on one node, DistributedPusher beyond.
-    """
-
-    def __init__(
-        self, registry: ListenerRegistry, ingest_host: str, ingest_port: int
-    ) -> None:
-        self.registry = registry
-        self.ingest_host = ingest_host
-        self.ingest_port = ingest_port
-
-    def push_batch(self, batch_df, epoch_id: int) -> None:
-        from pyspark.sql import functions as F
-
-        from eventstreamd_spark.functions.sse import sse_frame
-        from eventstreamd_spark.operators.filters import (
-            compile_filters,
-            parse_filter,
-        )
-
-        groups = sorted(
-            {
-                (c.subsystem, c.filters)
-                for c in self.registry.connections.values()
-            }
-        )
-        if not groups:
-            return
-        parsed = batch_df.withColumn(
-            "__v", F.try_parse_json(F.col("data"))
-        ).withColumn(
-            "__frame",
-            sse_frame(F.col("event_type"), F.col("data"), F.col("id")),
-        )
-        parts = []
-        for subsystem, filters in groups:
-            specs = [parse_filter(f) for f in filters]
-            tag = json.dumps(
-                {"subsystem": subsystem, "filters": list(filters)}
-            )
-            parts.append(
-                parsed.filter(
-                    (F.col("subsystem") == subsystem)
-                    & compile_filters(specs, F.col("__v"), pre_parsed=True)
-                ).select(
-                    F.lit(tag).alias("tag"), F.col("__frame").alias("frame")
-                )
-            )
-        union = parts[0]
-        for p in parts[1:]:
-            union = union.unionByName(p)
-
-        host, port = self.ingest_host, self.ingest_port
-
-        def send(rows) -> None:  # runs on executors
-            import json as _json
-            import socket
-
-            sock = None
-            try:
-                for row in rows:
-                    if sock is None:  # connect lazily: empty partitions free
-                        sock = socket.create_connection((host, port))
-                    msg = _json.loads(row.tag)
-                    msg["frame"] = row.frame
-                    sock.sendall((_json.dumps(msg) + "\n").encode())
-            finally:
-                if sock is not None:
-                    sock.close()
-
-        union.foreachPartition(send)
 
 
 async def run_http_server(

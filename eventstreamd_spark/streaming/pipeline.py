@@ -139,8 +139,9 @@ def start_envelope_pipeline(
     trigger_seconds: int | None = None,
 ) -> StreamingQuery:
     """Daemon mode: stream validated envelopes into a sink callback that
-    handles *dynamic* subscriptions (ListenerRegistry.push_batch filters
-    each micro-batch with per-connection compiled predicates)."""
+    handles *dynamic* subscriptions (ListenerRegistry.push_batch matches
+    each micro-batch against every live subscription's compiled
+    predicate in one Spark job)."""
     env = validate_envelope(read_event_stream(spark, spool_dir))
     writer = (
         env.writeStream.outputMode("append")

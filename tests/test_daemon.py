@@ -8,8 +8,6 @@ import asyncio
 import datetime
 import json
 
-import pytest
-
 from eventstreamd_spark.streaming.daemon import run_daemon
 from eventstreamd_spark.streaming.http_frontend import AuthError
 
@@ -49,14 +47,9 @@ async def _read_until(reader: asyncio.StreamReader, needle: str, timeout: float 
     return buf
 
 
-import pytest
-
-
-@pytest.mark.parametrize("push_mode", ["driver", "distributed"])
-def test_daemon_end_to_end(spark, tmp_path, push_mode) -> None:
-    """Full contract in BOTH fan-out tiers: [Spark] PushMode = driver
-    (in-process push_batch) and distributed (executor-side
-    DistributedPusher through the frame-ingest tier)."""
+def test_daemon_end_to_end(spark, tmp_path) -> None:
+    """Full contract: produce over the socket, filter and route in
+    Spark, receive over SSE, see the listener in /stats."""
     sock = str(tmp_path / "evtd.sock")
 
     async def auth(path: str, headers: dict[str, str]) -> tuple[datetime.datetime | None, None]:
@@ -75,7 +68,6 @@ def test_daemon_end_to_end(spark, tmp_path, push_mode) -> None:
                 trigger_seconds=1,
                 auth=auth,
                 stop_event=stop,
-                push_mode=push_mode,
             )
         )
         for _ in range(100):  # wait for the socket server to come up
@@ -186,54 +178,71 @@ def test_expiry_logout(spark, tmp_path) -> None:
     asyncio.run(scenario())
 
 
-def test_distributed_push_executor_side(spark) -> None:
-    """The cluster-scale fan-out path: frames travel task -> frame-ingest
-    socket -> connection queues, never through a driver collect()."""
+def test_push_batch_one_job_per_call(spark, tmp_path) -> None:
+    """Every live subscription is matched in ONE Spark job per
+    micro-batch, and each connection gets its frames in event order.
+    Jobs are counted through a job group and ``statusTracker``."""
     from eventstreamd_spark.streaming.http_frontend import (
         Connection,
-        DistributedPusher,
         ListenerRegistry,
-        run_frame_ingest,
     )
 
-    batch = spark.createDataFrame(
-        [
-            ("orders", "add", '{"k": 60}', "e1"),   # matches k>=50
-            ("orders", "add", '{"k": 10}', "e2"),   # filtered out
-            ("other", "add", '{"k": 99}', "e3"),    # wrong subsystem
-        ],
-        "subsystem string, event_type string, data string, id string",
+    rows = [
+        ("orders", "add", '{"k": 60}', "e1"),   # k>=50 and unfiltered
+        ("orders", "add", '{"k": 10}', "e2"),   # unfiltered only
+        ("other", "add", '{"k": 99}', "e3"),    # wrong subsystem
+        ("orders", "add", '{"k": 70}', "e4"),   # k>=50 and unfiltered
+        ("billing", "add", '{"k": 80}', "e5"),  # billing sub only
+    ]
+    src = tmp_path / "batch.jsonl"
+    src.write_text(
+        "".join(
+            json.dumps(dict(zip(("subsystem", "event_type", "data", "id"), r)))
+            + "\n"
+            for r in rows
+        )
     )
+    # a file scan, like a micro-batch: a local relation would be
+    # evaluated on the driver without any job
+    batch = spark.read.schema(
+        "subsystem string, event_type string, data string, id string"
+    ).json(str(src))
 
-    async def scenario() -> None:
-        loop = asyncio.get_running_loop()
-        registry = ListenerRegistry(loop=loop)
-        server = await run_frame_ingest("127.0.0.1", 0, registry)
-        port = server.sockets[0].getsockname()[1]
+    registry = ListenerRegistry()
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
 
-        match = Connection("orders", ("k>=50",), asyncio.Queue())
-        loose = Connection("orders", (), asyncio.Queue())
-        registry.add(match)
-        registry.add(loose)
+    def push(group: str) -> int:
+        sc.setJobGroup(group, "push_batch contract")
+        try:
+            registry.push_batch(batch, 0)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(tracker.getJobIdsForGroup(group))
 
-        pusher = DistributedPusher(registry, "127.0.0.1", port)
-        # the Spark action blocks; keep the loop free to serve ingest
-        await loop.run_in_executor(None, pusher.push_batch, batch, 0)
+    assert push("push-none") == 0  # no connections: no Spark work at all
 
-        frame = await asyncio.wait_for(match.queue.get(), 10)
-        assert "id: e1" in frame and '"k": 60' in frame
-        assert match.queue.empty()  # e2/e3 never delivered to the filtered sub
+    match = [Connection("orders", ("k>=50",), asyncio.Queue()) for _ in range(2)]
+    loose = Connection("orders", (), asyncio.Queue())
+    billing = Connection("billing", ("k>=50",), asyncio.Queue())
+    absent = Connection("nobody", (), asyncio.Queue())
+    for conn in (*match, loose, billing, absent):
+        registry.add(conn)
+    assert push("push-four-subs") == 1
 
-        got = set()
-        for _ in range(2):  # unfiltered orders sub sees e1 AND e2, not e3
-            got.add(await asyncio.wait_for(loose.queue.get(), 10))
-        assert any("id: e1" in f for f in got) and any("id: e2" in f for f in got)
-        assert not any("id: e3" in f for f in got)
+    def ids(conn: Connection) -> list[str]:
+        out = []
+        while not conn.queue.empty():
+            frame = conn.queue.get_nowait()
+            assert frame.startswith("event: add\r\ndata: ")
+            out.append(frame.split("id: ")[1].split("\r\n")[0])
+        return out
 
-        server.close()
-        await server.wait_closed()
-
-    asyncio.run(scenario())
+    for conn in match:
+        assert ids(conn) == ["e1", "e4"]
+    assert ids(loose) == ["e1", "e2", "e4"]
+    assert ids(billing) == ["e5"]
+    assert ids(absent) == []
 
 
 def test_stale_socket_removed_live_socket_refused(tmp_path) -> None:
@@ -311,17 +320,6 @@ def test_config_parsing(tmp_path) -> None:
     cfg2 = read_config(str(ini2))
     assert cfg2.socket_file == Config().socket_file
     assert cfg2.http_port == 8888 and not cfg2.with_ssl
-    assert cfg2.push_mode == "driver"  # default fan-out tier
-    # [Spark] PushMode selects the fan-out tier; junk is rejected
-    ini3 = tmp_path / "push.conf"
-    ini3.write_text("[Spark]\nPushMode = distributed\n")
-    assert read_config(str(ini3)).push_mode == "distributed"
-    ini4 = tmp_path / "bad.conf"
-    ini4.write_text("[Spark]\nPushMode = sideways\n")
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="PushMode"):
-        read_config(str(ini4))
 
 
 def test_last_event_id_replay(spark, tmp_path) -> None:

@@ -4,8 +4,11 @@ tier's cross-codec exactness contract builds on."""
 
 from __future__ import annotations
 
+import struct
+
 import numpy as np
 import pytest
+from hypothesis import given, settings, strategies as st
 
 from eventstreamd_spark.functions.jpeg import (
     QUANT_LUMA,
@@ -13,6 +16,7 @@ from eventstreamd_spark.functions.jpeg import (
     encode_jpeg,
 )
 from eventstreamd_spark.functions.image import decode_image, image_kind
+from tests.mutations import decodes_or_rejects, mutations
 
 
 def _rng(seed: int) -> np.random.RandomState:
@@ -142,3 +146,53 @@ def test_image_dispatch() -> None:
     assert decode_image(pb)[:3] == (8, 8, 1)
     with pytest.raises(ValueError):
         decode_image(b"GIF89a")
+
+
+
+# --- fail-closed fuzzing: a mutated stream decodes or raises ValueError ----
+
+_FUZZ_BLOBS = (
+    encode_jpeg(
+        17, 13, 3, _rng(11).randint(0, 256, 17 * 13 * 3).astype(np.uint8).tobytes(),
+        quality=80,
+    ),
+    encode_jpeg(16, 16, 1, _rng(12).randint(0, 256, 256).astype(np.uint8).tobytes()),
+)
+
+
+def _check(out) -> None:
+    w, h, ch, px = out
+    assert len(px) == w * h * ch
+
+
+@given(mutations(_FUZZ_BLOBS))
+@settings(max_examples=300, deadline=None)
+def test_mutated_streams_fail_closed(blob) -> None:
+    decodes_or_rejects(decode_jpeg, blob, _check)
+
+
+@given(w=st.integers(0, 65535), h=st.integers(0, 65535))
+@settings(max_examples=100, deadline=None)
+def test_huge_declared_dimensions_fail_closed(w, h) -> None:
+    """A frame header may claim any size; nothing is allocated for it
+    beyond what the entropy data could actually code."""
+    blob = bytearray(_FUZZ_BLOBS[0])
+    sof = blob.find(b"\xff\xc0")
+    blob[sof + 5 : sof + 9] = struct.pack(">HH", h, w)
+    decodes_or_rejects(decode_jpeg, bytes(blob), _check)
+
+
+@given(st.lists(st.integers(0, 255), min_size=16, max_size=16), st.binary(max_size=40))
+@settings(max_examples=100, deadline=None)
+def test_bad_huffman_tables_fail_closed(bits, vals) -> None:
+    """Arbitrary DHT BITS/HUFFVAL (over-full code spaces, short value
+    lists) replace the luma DC table."""
+    blob = _FUZZ_BLOBS[1]
+    dht = blob.find(b"\xff\xc4")
+    (ln,) = struct.unpack(">H", blob[dht + 2 : dht + 4])
+    body = bytes([0x00]) + bytes(bits) + vals
+    spliced = (
+        blob[:dht] + b"\xff\xc4" + struct.pack(">H", len(body) + 2) + body
+        + blob[dht + 2 + ln :]
+    )
+    decodes_or_rejects(decode_jpeg, spliced, _check)

@@ -5,11 +5,15 @@ from __future__ import annotations
 import struct
 
 import pytest
+from hypothesis import given, settings, strategies as st
 
 from eventstreamd_spark.functions.mp4 import (
     _box,
+    _full_box,
     decode_mp4,
+    decode_mp4_samples,
     encode_minimal_mp4,
+    encode_video_mp4,
 )
 from eventstreamd_spark.operators.multimodal import (
     _decode,
@@ -17,6 +21,7 @@ from eventstreamd_spark.operators.multimodal import (
     _mp4_decode,
     _synth_mp4,
 )
+from tests.mutations import decodes_or_rejects, mutations
 
 
 def test_roundtrip_metadata() -> None:
@@ -69,8 +74,6 @@ def test_synth_mp4_closed_form() -> None:
     dur = 10000 + (doc_id * 37) % 90000
     assert f == [float(ts), float(dur), float(1 + doc_id % 3), dur / ts]
 
-
-from hypothesis import given, settings, strategies as st
 
 
 @given(
@@ -207,3 +210,50 @@ def test_sample_tables_fixed_size_and_co64() -> None:
     w, h, fc, got = decode_mp4_samples(blob)
     assert (w, h, fc) == (8, 8, b"png ")
     assert got == frames
+
+
+# --- fail-closed fuzzing: mutated files decode or raise ValueError ---------
+
+_FUZZ_BLOBS = (
+    encode_video_mp4(8, 8, [bytes([i]) * (5 + i) for i in range(6)]),
+    encode_minimal_mp4(600, 1000, 2),
+)
+
+
+def _check_samples(out) -> None:
+    _w, _h, fourcc, samples = out
+    assert len(fourcc) == 4 and all(isinstance(s, bytes) for s in samples)
+
+
+@given(mutations(_FUZZ_BLOBS))
+@settings(max_examples=300, deadline=None)
+def test_mutated_files_fail_closed(blob) -> None:
+    decodes_or_rejects(decode_mp4_samples, blob, _check_samples)
+    decodes_or_rejects(decode_mp4, blob, lambda out: None)
+
+
+@given(
+    n=st.integers(0, 2**32 - 1),
+    fixed=st.integers(0, 2**32 - 1),
+    n_chunks=st.integers(0, 2**32 - 1),
+    first=st.integers(0, 2**32 - 1),
+    per_chunk=st.integers(0, 2**32 - 1),
+)
+@settings(max_examples=100, deadline=None)
+def test_huge_declared_counts_fail_closed(n, fixed, n_chunks, first, per_chunk) -> None:
+    """Sample and chunk counts may claim anything; no list is built
+    larger than the file could hold."""
+    blob = encode_video_mp4(8, 8, [b"abcdef"] * 3)
+    stsd_at = blob.index(b"stbl") + 4  # stsd is stbl's first child
+    (stsd_size,) = struct.unpack(">I", blob[stsd_at : stsd_at + 4])
+    stbl = _box(
+        b"stbl",
+        blob[stsd_at : stsd_at + stsd_size]
+        + _full_box(b"stsc", struct.pack(">IIII", 1, first, per_chunk, 1))
+        + _full_box(b"stsz", struct.pack(">II", fixed, n))
+        + _full_box(b"stco", struct.pack(">II", n_chunks, 40)),
+    )
+    moov = _box(b"moov", _box(b"trak", _box(b"mdia", _box(b"minf", stbl))))
+    decodes_or_rejects(
+        decode_mp4_samples, blob[: blob.index(b"moov") - 4] + moov, _check_samples
+    )

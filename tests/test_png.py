@@ -8,13 +8,16 @@ import struct
 import zlib
 
 import pytest
+from hypothesis import given, settings, strategies as st
 
 from eventstreamd_spark.functions.png import (
+    MAX_PIXELS,
     SIGNATURE,
     _chunk,
     decode_png,
     encode_png,
 )
+from tests.mutations import decodes_or_rejects, mutations
 
 
 def _pixels(w: int, h: int, channels: int, seed: int = 0) -> bytes:
@@ -105,3 +108,36 @@ def test_decode_dispatch_real_vs_fallback() -> None:
     assert _decode(b"plain text") == _fake_decode(b"plain text")
     # corrupt PNG (signature but garbage body) falls back, not raises
     assert _decode(SIGNATURE + b"garbage") == _fake_decode(SIGNATURE + b"garbage")
+
+
+# --- fail-closed fuzzing: a mutated stream decodes or raises ValueError ----
+
+_FUZZ_BLOBS = tuple(encode_png(9, 7, c, _pixels(9, 7, c, seed=c)) for c in (1, 2, 3, 4))
+
+
+def _check(out) -> None:
+    w, h, ch, px = out
+    assert len(px) == w * h * ch
+
+
+@given(mutations(_FUZZ_BLOBS))
+@settings(max_examples=300, deadline=None)
+def test_mutated_streams_fail_closed(blob) -> None:
+    decodes_or_rejects(decode_png, blob, _check)
+
+
+@given(w=st.integers(0, 2**32 - 1), h=st.integers(0, 2**32 - 1))
+@settings(max_examples=100, deadline=None)
+def test_huge_declared_dimensions_fail_closed(w, h) -> None:
+    """IHDR may claim any size; past MAX_PIXELS nothing is inflated, and
+    below it inflation stops one byte past the declared size."""
+    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
+    idat = zlib.compress(bytes(64 * 1024))  # a small bomb: 64 KiB of zeros
+    blob = (
+        SIGNATURE + _chunk(b"IHDR", ihdr) + _chunk(b"IDAT", idat)
+        + _chunk(b"IEND", b"")
+    )
+    decodes_or_rejects(decode_png, blob, _check)
+    if w * h > MAX_PIXELS:
+        with pytest.raises(ValueError, match="dimensions"):
+            decode_png(blob)

@@ -169,39 +169,6 @@ def test_streaming_tumbling_and_session_windows(spark, sf_dir, tmp_path) -> None
     assert n_sessions > 0
 
 
-def test_streaming_observed_metrics(spark, tmp_path) -> None:
-    """O11 streaming twin: observe() metrics reach the listener per
-    micro-batch with no extra pass over the data."""
-    from eventstreamd_spark.operators.stats import MetricsCollector, with_observed_metrics
-
-    spool = str(tmp_path / "spool")
-    jsonlines.write_spool_file(
-        spool, [msg("a", 1, "x"), msg("a", 2, "y"), msg("b", 3, "z")], 0
-    )
-    collector = MetricsCollector().attach(spark)
-    try:
-        env = with_observed_metrics(
-            pipeline.validate_envelope(pipeline.read_event_stream(spark, spool))
-        )
-        q = (
-            env.writeStream.outputMode("append")
-            .format("noop")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(60)
-        import time
-
-        deadline = time.time() + 30  # listener events are delivered async
-        while collector.totals["n_events"] < 3 and time.time() < deadline:
-            time.sleep(0.5)
-        assert collector.totals["n_events"] == 3
-        assert collector.totals["batches"] >= 1
-    finally:
-        collector.detach(spark)
-
-
 def test_stateful_sessionizer_and_expiry(spark, tmp_path) -> None:
     """applyInPandasWithState: sessions close on gap timeout; expiry
     tracker emits logout rows when a TTL lapses unrefreshed."""

@@ -59,9 +59,7 @@ def main() -> None:
             + ", ".join(sorted(reg.QUERIES))
         )
 
-    spark = get_spark(
-        "ann-family-bench", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    )
+    spark = get_spark("ann-family-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     out: dict[str, dict] = {}

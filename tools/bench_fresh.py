@@ -32,9 +32,7 @@ def measure(name: str, n: int = 4) -> dict:
     from eventstreamd_spark.session import get_spark
     from eventstreamd_spark import queries_registry as reg
 
-    spark = get_spark(
-        "bench-fresh", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    )
+    spark = get_spark("bench-fresh")
     spark.sparkContext.setLogLevel("ERROR")
     fn = reg.QUERIES[name]
 

@@ -155,9 +155,7 @@ def run_once(mode: str) -> dict:
     from eventstreamd_spark import queries_registry as reg
     from eventstreamd_spark.session import get_spark, load_table
 
-    spark = get_spark(
-        "cache-pressure-ab", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    )
+    spark = get_spark("cache-pressure-ab")
     spark.sparkContext.setLogLevel("ERROR")
     _force(load_table(spark, SF_DIR, "lineitem"))  # JVM warm-up
 

@@ -34,7 +34,7 @@ def main() -> None:
     from eventstreamd_spark.session import get_spark
     from eventstreamd_spark import queries_registry as reg
 
-    spark = get_spark("dump-plans", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = get_spark("dump-plans")
     spark.sparkContext.setLogLevel("ERROR")
     for name in names:
         df = reg.QUERIES[name](spark, SF_DIR)

@@ -35,9 +35,7 @@ def profile(names: list[str]) -> list[dict]:
     from eventstreamd_spark.session import get_spark
     from eventstreamd_spark import queries_registry as reg
 
-    spark = get_spark(
-        "job-profile", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    )
+    spark = get_spark("job-profile")
     spark.sparkContext.setLogLevel("ERROR")
     tracker = spark.sparkContext.statusTracker()
     out = []

@@ -208,7 +208,7 @@ def steady(fn, spark, sf_dir: str) -> float:
 def main() -> None:
     from eventstreamd_spark.session import get_spark
 
-    spark = get_spark("scale-probe", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = get_spark("scale-probe")
     spark.sparkContext.setLogLevel("ERROR")
 
     from eventstreamd_spark import queries_registry as reg

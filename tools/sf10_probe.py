@@ -258,9 +258,7 @@ def main() -> None:
 
     from eventstreamd_spark.session import get_spark
 
-    spark = get_spark(
-        "sf10-probe", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    )
+    spark = get_spark("sf10-probe")
     spark.sparkContext.setLogLevel("ERROR")
 
     from eventstreamd_spark import queries_registry as reg

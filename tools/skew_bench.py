@@ -85,9 +85,7 @@ def main() -> None:
     from eventstreamd_spark.operators import skew as sk
     from eventstreamd_spark.session import get_spark, load_table
 
-    spark = get_spark(
-        "skew-bench", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    )
+    spark = get_spark("skew-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     path = build_fixture(spark)
